@@ -44,13 +44,26 @@ def lit_double_array(vals):
     return F.expr("array(" + ",".join(_sql_double(v) for v in vals) + ")")
 
 
-def lit_str_map(d: dict, valfmt=str):
+def _sql_int(v) -> str:
+    # bool is an int subclass, but str(True) is not an int literal
+    if isinstance(v, bool) or not isinstance(v, int):
+        raise TypeError(
+            f"lit_str_map renders int values by default, got {type(v).__name__};"
+            " pass a valfmt that emits a SQL literal"
+        )
+    return str(v)
+
+
+def lit_str_map(d: dict, valfmt=_sql_int):
     """Literal ``map<string, T>`` column in one parsed expression.
 
-    ``valfmt`` renders each value as a SQL literal snippet (default ``str``
-    — correct for ints).  Keys and values iterate the same dict, so the
-    arrays always align.
+    ``valfmt`` renders each value as a SQL literal snippet (default: ints
+    only; bools and other types raise ``TypeError``).  Keys and values
+    iterate the same dict, so the arrays always align.  An empty dict raises
+    ``ValueError``: ``array()`` literals carry no key or value type.
     """
+    if not d:
+        raise ValueError("lit_str_map needs a non-empty dict")
     ks = ",".join(sql_str(k) for k in d)
     vs = ",".join(valfmt(v) for v in d.values())
     return F.expr(f"map_from_arrays(array({ks}), array({vs}))")

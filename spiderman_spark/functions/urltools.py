@@ -5,17 +5,18 @@ Reference parity: scrapy-redis RFPDupeFilter computes sha1 over
 (method, canonical url, body) — `SP/settings.py:103` pins
 scrapy_redis==0.6.8 whose filter delegates to scrapy's
 request_fingerprint.  We reproduce the skeleton (sha1 over
-method + canonicalized URL; our synthetic requests carry no body) and keep the
-whole thing a pure function so it can run driver-side (simulator) and inside
-Arrow-vectorized pandas UDFs (engine) unchanged.
+method + canonicalized URL + request body) and keep the whole thing a pure
+function so it runs unchanged driver-side (simulator) and inside the engine's
+parse ``mapInPandas`` (operators/parse.py), which stamps every child request
+with its ``fp``/``canon`` in the same Python pass that emits it — no separate
+pandas-UDF stage, whose fixed per-task cost would double the round's Python
+overhead (see the operators/parse.py docstring).
 
 Scale note: the persistent URL-seen table is keyed by ``xxhash64(canonical)``
 (8 bytes vs 40-hex sha1) per the north rule; the sha1 fingerprint column is
 retained for reference parity. Both derive from the same canonical form.
 """
 
-# NOTE: no `from __future__ import annotations` here — stringified type hints
-# break pandas_udf signature inference inside register_udfs().
 import hashlib
 from urllib.parse import urljoin as _urljoin
 
@@ -62,55 +63,3 @@ def urljoin(base: str, link: str) -> str:
 def host_of(url: str) -> str:
     return url.split("/", 3)[2] if "://" in url else url.split("/", 1)[0]
 
-
-# ------------------------------------------------------------ pandas UDFs
-
-_UDF_CACHE: tuple[str, dict] | None = None
-
-
-def register_udfs():
-    """Column-level vectorized versions. Imported lazily so the pure functions
-    above stay usable without pyspark on the path.  Memoized PER SparkContext
-    (a UserDefinedFunction caches its JVM handle against the context that
-    first used it, so a process that restarts sessions — the scaling bench —
-    must not reuse stale handles): pandas_udf construction is driver/py4j
-    work the crawl round would otherwise repay on every step."""
-    global _UDF_CACHE
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    # no active session → no applicationId to memoize against: build fresh
-    # handles and do NOT cache them (two sessionless callers in different
-    # restarted contexts must never share JVM handles via an "" key)
-    key = active.sparkContext.applicationId if active is not None else None
-    if key is not None and _UDF_CACHE is not None and _UDF_CACHE[0] == key:
-        return _UDF_CACHE[1]
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def canonical_udf(urls: pd.Series) -> pd.Series:
-        return urls.map(canonical)
-
-    @F.pandas_udf(StringType())
-    def fingerprint_udf(
-        methods: pd.Series, urls: pd.Series, bodies: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            [fingerprint(m, u, b) for m, u, b in zip(methods, urls, bodies)],
-            dtype="object",
-        )
-
-    @F.pandas_udf(StringType())
-    def urljoin_udf(bases: pd.Series, links: pd.Series) -> pd.Series:
-        return pd.Series([_urljoin(b, l) for b, l in zip(bases, links)], dtype="object")
-
-    udfs = {
-        "canonical": canonical_udf,
-        "fingerprint": fingerprint_udf,
-        "urljoin": urljoin_udf,
-    }
-    if key is not None:
-        _UDF_CACHE = (key, udfs)
-    return udfs

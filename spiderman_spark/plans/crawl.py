@@ -6,9 +6,9 @@ micro-batch over the ``frontier`` table:
 
     pending ──politeness──▶ eligible ──fetch join──▶ ok / retry / failed
        ▲                                   │
-       │                                parse (mapInPandas)
+       │                   parse + fingerprint (one mapInPandas)
        │                                   │
-    deferred ∪ retries ∪ admitted ◀──dedup gate──── child requests
+    deferred ∪ retries ∪ admitted ◀──dedup gate──── child requests (fp, canon)
                                            └──▶ items_raw, crawl_order,
                                                 url_seen, metrics (appends)
 
@@ -17,6 +17,12 @@ get seq in (parent_seq, child_idx) order; retries keep their original seq;
 politeness picks the first B pending per host by seq.  All of it matches the
 single-threaded simulator bit-for-bit — that is the correctness gate
 (BASELINE.json: "crawl ordering and URL-seen set must match").
+
+With Bloom off (the default), the round's only Python work is that one parse
+stage, run with one task per core: on the pinned PySpark 4.1.2 stack every
+Python task pays a fixed ~270 ms of worker setup (see operators/parse.py),
+so a second Python stage or 4x-oversubscribed tasks cost more wall than the
+crawl work they carry.
 
 Scale posture (the parts that matter at a 10^10-row frontier):
 - fetch = ``corpus ⋈ broadcast(eligible)``: the per-round batch is small by
@@ -46,7 +52,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..corpusgen import RETRY_HTTP_CODES
@@ -100,7 +106,10 @@ class CrawlConfig:
     # as a 2-straggler-task parse tail that serialized ~45 µs/page of an
     # otherwise parallel stage.  One extra shuffle of the round's page rows
     # buys a balanced Arrow/Python parse wave; at web scale hub/leaf mixes
-    # are the norm, so this is on by default.
+    # are the norm, so this is on by default.  Width is ONE task per core:
+    # the hash spread balances hubs, and every extra Python task pays a
+    # fixed ~270 ms worker setup (operators/parse.py), so finer tail
+    # granularity costs more than the tail it trims.
     parse_rebalance: bool = True
     bizdate: str = "20240101"  # injected clock (SURVEY.md §7.3.2)
     ctime: str = "2024-01-01 00:00:00"
@@ -487,13 +496,11 @@ class CrawlEngine:
 
         pages = ok.where(F.col("callback").isin(list(self.spec.page_callbacks)))
         if cfg.parse_rebalance:
-            # spread hub pages uniformly before the Python parse wave (see
-            # CrawlConfig.parse_rebalance); 4x cores = fine tail granularity,
-            # capped by the round's own size so a 3-page tail round doesn't
-            # schedule 128 near-empty parse tasks
-            width = min(
-                4 * self.spark.sparkContext.defaultParallelism, max(1, n_eligible)
-            )
+            # spread hub pages uniformly before the Python parse wave, one
+            # task per core (see CrawlConfig.parse_rebalance), capped by the
+            # round's own size so a 3-page tail round doesn't schedule
+            # near-empty parse tasks
+            width = min(self.spark.sparkContext.defaultParallelism, n_eligible)
             pages = pages.repartition(width, F.xxhash64("url"))
         parsed = parse_pages(pages, self.spec.parse).persist()
 
@@ -544,12 +551,6 @@ class CrawlEngine:
             reqs = flagged.where("NOT _blocked").drop("_blocked", "_dis")
         if self.shard is not None:
             reqs = self._split_foreign(reqs)
-        from ..functions.urltools import register_udfs
-
-        udfs = register_udfs()
-        reqs = reqs.withColumn(
-            "fp", udfs["fingerprint"]("method", "url", "body")
-        ).withColumn("canon", udfs["canonical"]("url"))
         nofilter_cbs = [cb for cb, dont in cfg.callbacks.items() if dont]
         nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
         gated = reqs.where(~F.col("callback").isin(nofilter_cbs))
@@ -577,8 +578,6 @@ class CrawlEngine:
         else:
             gated = gated.join(seen.select("fp"), "fp", "left_anti")
         gated = gated.persist()  # feeds both new_seen and the children union
-        from pyspark.sql import Observation
-
         # observed row count rides the url_seen write (no extra action) and
         # gates the periodic compaction: nothing appended → nothing to compact
         obs_seen = Observation()
@@ -591,8 +590,6 @@ class CrawlEngine:
         # spreads children into disjoint, ordered stride blocks — no global
         # dense rank, hence no second driver action in the round
         stride = cfg.child_stride
-        from pyspark.sql import Observation
-
         obs_children = Observation()
         children = (
             admitted.select(
@@ -617,7 +614,7 @@ class CrawlEngine:
             "rank", F.lit(self.round).alias("round"), "url", "host", "attempt",
             "ua", "cookie",
         )
-        items = parsed.where("out_kind = 'item'")
+        items = parsed.where("out_kind = 'item'").drop("fp", "canon")
 
         n_items_est = n_eligible * 8  # pages emit a handful of items each
         seen_tb = self.catalog.table("url_seen")
@@ -773,7 +770,7 @@ class CrawlEngine:
         (
             foreign.select(
                 "url", "host", "method", "callback", "body", "meta_json",
-                "parent_seq", "child_idx", "priority",
+                "parent_seq", "child_idx", "priority", "fp", "canon",
                 F.col("_prank").alias("parent_rank"),
                 F.lit(w).alias("from_worker"), "_w",
             )
@@ -808,13 +805,8 @@ class CrawlEngine:
         fresh = sorted(set(os.listdir(inbox)) - self._ingested)
         if not fresh:
             return 0
+        # drops carry the exporter's parse-pass fp/canon: no re-fingerprint
         reqs = self.spark.read.parquet(*[os.path.join(inbox, f) for f in fresh])
-        from ..functions.urltools import register_udfs
-
-        udfs = register_udfs()
-        reqs = reqs.withColumn(
-            "fp", udfs["fingerprint"]("method", "url", "body")
-        ).withColumn("canon", udfs["canonical"]("url"))
         nofilter_cbs = [cb for cb, dont in self.cfg.callbacks.items() if dont]
         nofilter = reqs.where(F.col("callback").isin(nofilter_cbs))
         gated = reqs.where(~F.col("callback").isin(nofilter_cbs))

@@ -291,3 +291,28 @@ def test_write_baseline_md_renders_all_protocols(tmp_path, monkeypatch):
     # fit on the synthetic 2->8 walls: B=70, C=230 -> per-page c and the
     # required round size must appear as a sane positive number
     assert "B ≈ 70 s" in md
+
+
+def test_write_baseline_md_renders_s7_without_saturation_fit(tmp_path, monkeypatch):
+    """S7 cross-checks b against the 2⇄8 fit; with no `crawl_2to8` run in
+    the store the sentence must still read correctly (ADVICE low)."""
+    import bench
+
+    store = {
+        "crawl_8to32": _cx(8, 32, [_leg(0, 8, 100.0), _leg(0, 32, 90.0)], [0.28]),
+        "crawl_8to32_xxl": _cx(
+            8, 32, [_leg(0, 8, 160.0, 5_000_000), _leg(0, 32, 62.0, 5_000_000)],
+            [0.65],
+        ),
+    }
+    monkeypatch.setattr(bench, "_STORE_PATH", str(tmp_path / "BENCH" / "s.json"))
+    os.makedirs(tmp_path / "BENCH")
+    bench._write_baseline_md(store)
+    md = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+    assert "### S7" in md
+    assert "fit's the" not in md
+    assert "(1) both b values are to be checked against the 2⇄8 Amdahl fit" in md
+    store["crawl_2to8"] = _cx(2, 8, [_leg(0, 2, 185.0), _leg(0, 8, 98.75)], [0.47])
+    bench._write_baseline_md(store)
+    md = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+    assert "(1) both b values sit near the 2⇄8 Amdahl fit's ~14.0 s/round" in md

@@ -7,6 +7,7 @@ must behave identically to the ``F.lit`` key it replaces, for every
 character class a crawl host name or stopword list could ever smuggle in.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from spiderman_spark.functions.sqllit import lit_str_map, sql_str
@@ -63,3 +64,16 @@ def test_sql_str_round_trips(spark):
     exprs = [F.expr(sql_str(k)).alias(f"c{i}") for i, k in enumerate(ADVERSARIAL_KEYS)]
     row = spark.range(1).select(*exprs).collect()[0]
     assert list(row) == ADVERSARIAL_KEYS
+
+
+def test_lit_str_map_rejects_empty_dict():
+    with pytest.raises(ValueError, match="non-empty"):
+        lit_str_map({})
+
+
+def test_lit_str_map_default_valfmt_rejects_non_int_values(spark):
+    # bool is an int subclass, but str(True) is not an int literal
+    for bad in (True, False, 1.5, "1", None):
+        with pytest.raises(TypeError, match="valfmt"):
+            lit_str_map({"k": bad})
+    lit_str_map({"k": True}, valfmt=lambda v: "true" if v else "false")
